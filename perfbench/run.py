@@ -74,6 +74,35 @@ def fail(msg, code=2):
     sys.exit(code)
 
 
+_children = []
+
+
+def _stop_children(*_):
+    for p in _children:
+        if p.poll() is None:
+            os.killpg(p.pid, signal.SIGKILL)
+            p.wait()
+    fail("stopped", 4)
+
+
+def run_child(cmd, timeout, out_path, **kw):
+    """Run `cmd` in its own process group, output to `out_path`. The group is
+    killed when it outlives `timeout` (returns None) or when this script is
+    stopped. Returns the exit code."""
+    with open(out_path, "w") as out:
+        p = subprocess.Popen(cmd, stdout=out, stderr=subprocess.STDOUT,
+                             start_new_session=True, **kw)
+        _children.append(p)
+        try:
+            return p.wait(timeout=timeout)
+        except subprocess.TimeoutExpired:
+            os.killpg(p.pid, signal.SIGKILL)
+            p.wait()
+            return None
+        finally:
+            _children.remove(p)
+
+
 # ---------------------------------------------------------------- build
 
 def _source_stamp(root):
@@ -111,14 +140,14 @@ def build(root):
     env["SBT_OPTS"] = " ".join(opts)
     log("building program and harness (sbt, offline)")
     t0 = time.time()
-    proc = subprocess.run(
-        ["sbt", "--batch", "-Dsbt.log.noformat=true", "compile",
-         "export Runtime/fullClasspath"],
-        cwd=HERE, env=env, stdout=subprocess.PIPE, stderr=subprocess.STDOUT,
-        text=True, timeout=850)
-    lines = [ln for ln in proc.stdout.splitlines() if ".jar" in ln and not ln.startswith("[")]
-    if proc.returncode != 0 or not lines:
-        sys.stderr.write(proc.stdout[-4000:])
+    build_log = os.path.join(WORK, "build.log")
+    code = run_child(["sbt", "--batch", "-Dsbt.log.noformat=true", "compile",
+                      "export Runtime/fullClasspath"], 850, build_log, cwd=HERE, env=env)
+    with open(build_log) as f:
+        out = f.read()
+    lines = [ln for ln in out.splitlines() if ".jar" in ln and not ln.startswith("[")]
+    if code != 0 or not lines:
+        sys.stderr.write(out[-4000:])
         fail("build failed")
     cp = lines[-1].strip()
     with open(cp_file, "w") as f:
@@ -196,24 +225,19 @@ def run_harness(cp, spec, run_dir, cores, started):
     tmp = os.path.join(run_dir, "tmp")
     os.makedirs(tmp, exist_ok=True)
     cmd = ["java"] + [a for p in JDK_OPENS for a in ("--add-opens", f"java.base/{p}=ALL-UNNAMED")]
-    cmd += [f"-Xms{HEAP}", f"-Xmx{HEAP}", f"-Djava.io.tmpdir={tmp}", "-Dspark.ui.enabled=false",
-            "-Dspark.sql.session.timeZone=UTC", f"-Dspark.local.dir={tmp}",
-            "-cp", cp, "perfbench.Harness", spec_path]
+    cmd += [f"-Xms{HEAP}", f"-Xmx{HEAP}", "-XX:-UsePerfData", f"-Djava.io.tmpdir={tmp}",
+            "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
+            f"-Dspark.local.dir={tmp}", "-cp", cp, "perfbench.Harness", spec_path]
     env = {k: v for k, v in os.environ.items() if k not in ("SPARK_LOCAL_DIRS", "_JAVA_OPTIONS")}
     log_path = os.path.join(run_dir, "jvm.log")
-    with open(log_path, "w") as jlog:
-        proc = subprocess.Popen(cmd, cwd=run_dir, env=env, stdout=jlog, stderr=subprocess.STDOUT,
-                                start_new_session=True)
-        try:
-            proc.wait(timeout=max(10, DEADLINE_S - (time.time() - started)))
-        except subprocess.TimeoutExpired:
-            os.killpg(proc.pid, signal.SIGKILL)
-            proc.wait()
-            fail("benchmark JVM timed out", 3)
-    if proc.returncode != 0 or not os.path.exists(spec["result"]):
+    code = run_child(cmd, max(10, DEADLINE_S - (time.time() - started)), log_path,
+                     cwd=run_dir, env=env)
+    if code is None:
+        fail("benchmark JVM timed out", 3)
+    if code != 0 or not os.path.exists(spec["result"]):
         with open(log_path) as f:
             sys.stderr.write(f.read()[-4000:])
-        fail(f"benchmark JVM failed (exit {proc.returncode})", 3)
+        fail(f"benchmark JVM failed (exit {code})", 3)
     with open(spec["result"]) as f:
         return json.load(f)
 
@@ -277,6 +301,8 @@ def main():
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
     a = ap.parse_args()
     started = time.time()
+    signal.signal(signal.SIGTERM, _stop_children)
+    signal.signal(signal.SIGINT, _stop_children)
     root = os.getcwd()
     if not (os.path.isfile(os.path.join(root, "build.sbt"))
             and os.path.isdir(os.path.join(root, "src", "main", "scala", "graft"))):
