@@ -49,8 +49,8 @@ TPCH = ["q1_pricing_summary", "q2_min_cost", "q3_shipping_priority", "q4_priorit
 # The heaviest execution-bound operator of each LLM-data battery
 LLM_OPS = ["gr_pagerank", "dd_ngram_capped", "sim_ivf_trained", "mm_embed_prune",
            "cur_multimodal_prune", "txt_rake"]
-# Sizes, calibrated so that the measured body of each workload takes
-# about `--seconds` on a 4-core box (see perfbench/NOTES.md).
+# Sizes (why each: perfbench/NOTES.md). `--seconds` sets the stream's paced
+# phase and the lakehouse commit count (16 at the benchmark's 6 s).
 STREAM = {"events_per_file": 100, "warmup_files": 120, "offered_rate": 700,
           "backlog_files": 120, "max_files_per_trigger": 20,
           "dup_share": 0.02, "ooo_share": 0.05}
