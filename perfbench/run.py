@@ -52,7 +52,7 @@ LLM_OPS = ["gr_pagerank", "dd_ngram_capped", "sim_ivf_trained", "mm_embed_prune"
 # Sizes (why each: perfbench/NOTES.md). `--seconds` sets the stream's paced
 # phase and the lakehouse commit count (16 at the benchmark's 6 s).
 STREAM = {"events_per_file": 100, "warmup_files": 120, "offered_rate": 700,
-          "backlog_files": 120, "max_files_per_trigger": 20,
+          "backlog_files": 240, "max_files_per_trigger": 20,
           "dup_share": 0.02, "ooo_share": 0.05}
 BATCH = {"scale": 0.01, "data_seed": 42}
 LAKE = {"scale": 0.01, "files": 16, "commits_per_s": 8 / 3, "reads_per_commit": 3,
