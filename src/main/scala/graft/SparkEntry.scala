@@ -813,8 +813,8 @@ object SparkEntry {
             (col("o_orderkey") * lit(2654435761L) % lit(1000000007L)).as("o_tag"),
             floor(col("o_orderkey") / 2000).cast("long").as("o_part"))
           .repartitionByRange(8, col("o_orderkey"))
-        val (files, _, blooms) = TxnLog.stageWithIndex(base, root, "v1-clustered",
-          statsCol = "o_orderkey", bloomCol = "o_tag")
+        val (files, blooms) = TxnLog.stageWithIndex(base, root, "v1-clustered",
+          bloomCol = "o_tag")
         val multi = TxnLog.statsForStaged(s, root, "v1-clustered",
           Seq("o_orderkey", "o_part"), files)
         TxnLog.commit(root, "append", files, Nil, readVersion = 0L,
@@ -849,9 +849,10 @@ object SparkEntry {
           .select(col("o_orderkey"),
             round(col("o_totalprice") * 100).cast("long").as("price_cents"))
           .repartitionByRange(8, col("o_orderkey"))
-        val (files, stats) = TxnLog.stageWithStats(base, root, "v1-append", "o_orderkey")
+        val (files, stats) =
+          TxnLog.stageWithStatsFor(base, root, "v1-append", Seq("o_orderkey"))
         TxnLog.commit(root, "append", files, Nil, readVersion = 0L,
-          txnId = "v1-append", stats = stats, statsCol = "o_orderkey")
+          txnId = "v1-append", multiStats = stats)
         TxnLog.deleteWhere(s, root, col("o_orderkey") % 5 === 2, "v2-delete")
         ()
       }
@@ -883,9 +884,10 @@ object SparkEntry {
           .filter(col("o_orderkey") % 3 <= 1)
           .select(col("o_orderkey"), cents.as("price_cents"))
           .repartitionByRange(8, col("o_orderkey"))
-        val (files, stats) = TxnLog.stageWithStats(base, root, "v1-append", "o_orderkey")
+        val (files, stats) =
+          TxnLog.stageWithStatsFor(base, root, "v1-append", Seq("o_orderkey"))
         TxnLog.commit(root, "append", files, Nil, readVersion = 0L,
-          txnId = "v1-append", stats = stats, statsCol = "o_orderkey")
+          txnId = "v1-append", multiStats = stats)
         val source = Tables.orders(s, dir)
           .filter(col("o_orderkey") % 4 === 1)
           .select(col("o_orderkey"), (cents + 7).as("price_cents"))
@@ -960,9 +962,10 @@ object SparkEntry {
           .select(col("o_orderkey"),
             round(col("o_totalprice") * 100).cast("long").as("price_cents"))
           .repartitionByRange(8, col("o_orderkey"))
-        val (files, stats) = TxnLog.stageWithStats(base, root, "v1-append", "o_orderkey")
+        val (files, stats) =
+          TxnLog.stageWithStatsFor(base, root, "v1-append", Seq("o_orderkey"))
         TxnLog.commit(root, "append", files, Nil, readVersion = 0L,
-          txnId = "v1-append", stats = stats, statsCol = "o_orderkey")
+          txnId = "v1-append", multiStats = stats)
         TxnLog.deleteWhere(s, root, col("o_orderkey") % 5 === 2, "v2-delete")
         val cut = Tables.orders(s, dir)
           .agg(max(col("o_orderkey")).cast("long")).head().getLong(0) / 3
@@ -1222,8 +1225,9 @@ object SparkEntry {
         graft.sources.TxnLog.read(s, root)
           .except(graft.sources.TxnLog.read(s, root, version = 2L))
       }),
-      // stats-based data skipping: the range-clustered table's sidecar
-      // (min,max) prove most files irrelevant before any open — the
+      // stats-based data skipping: the per-file (min,max) stats inline
+      // in the range-clustered table's commit records prove most
+      // files irrelevant before any open — the
       // log-native counterpart of io_prune_stats (TxnLogSpec pins the
       // file-count reduction; here the ORACLE pins the result)
       "tx_prune_read" -> ((s, dir) =>
@@ -1402,9 +1406,9 @@ object SparkEntry {
         s.sql(s"""SELECT o_orderkey, price_cents
                   FROM $cat.db.ord VERSION AS OF 2""")
       }),
-      // SQL UPDATE (v5): group-based copy-on-write — only the files
-      // whose stats admit %7 keys (all of them here) were rewritten,
-      // deletion vectors compacted in, one commit
+      // SQL UPDATE (v5): copy-on-write — only the files whose stats
+      // admit %7 keys (all of them here) were rewritten, deletion
+      // vectors compacted in, one commit
       "tx_cat_update" -> ((s, dir) => {
         val cat = ensureCatalogTable(s, dir)
         s.sql(s"""SELECT o_orderkey, price_cents

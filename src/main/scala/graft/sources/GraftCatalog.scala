@@ -1271,15 +1271,16 @@ class GraftTable(val root: String, version: Long, timeTraveled: Boolean)
     else new GraftWriteBuilder(root, info)
   }
 
-  /** SQL `UPDATE` / `MERGE INTO` (and rewrite-path DELETE) — the
-    * group-based copy-on-write framework, [[GraftRowLevelOperation]].
-    * Metadata-only DELETEs still take [[deleteWhere]] (Spark's
-    * metadata-delete optimization asks that first).
+  /** SQL `UPDATE` / `MERGE INTO` (and rewrite-path DELETE) — delta
+    * row-level operations in `cow` or `mor` mode,
+    * [[GraftRowLevel.builder]]. Metadata-only DELETEs still take
+    * [[deleteWhere]] (Spark's metadata-delete optimization asks that
+    * first).
     */
   override def newRowLevelOperationBuilder(
       info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
     : org.apache.spark.sql.connector.write.RowLevelOperationBuilder =
-    GraftRowLevelOperation.builder(root, schema, info)
+    GraftRowLevel.builder(root, schema, info)
 
   // ---- DELETE FROM / TRUNCATE ----
 

@@ -6,7 +6,7 @@ import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, Write, WriteBuilder, WriterCommitMessage}
+import org.apache.spark.sql.connector.write.{LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, WriterCommitMessage}
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.execution.datasources.OutputWriterFactory
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
@@ -14,124 +14,31 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.util.SerializableConfiguration
 
-/** SQL `UPDATE` and `MERGE INTO` (and rewrite-path `DELETE`) over
-  * [[TxnLog]] tables — Spark's group-based row-level operation
-  * framework (the public Iceberg copy-on-write recipe) wired to the
-  * log's transactional commit:
+/** DML write-path selection, per session
+  * (`SET spark.graft.dml.mode = cow | mor`). Both modes run
+  * [[GraftDeltaOperation]]:
   *
-  *  1. Spark asks the operation for a SCAN of the candidate rows.
-  *     That scan is a [[GraftScan]], so the command's ON/WHERE
-  *     condition prunes FILES against the log's typed stats and
-  *     blooms first — the "groups" that get rewritten are exactly
-  *     the files the predicate could touch, and the scan CAPTURES
-  *     that file list plus the snapshot version it resolved.
-  *  2. Spark computes the replacement rows (updated + carried-over +
-  *     merge-inserted) and hands them to the operation's WRITE — a
-  *     real distributed [[BatchWrite]]: each task writes a parquet
-  *     file into the transaction's staging directory through Spark's
-  *     own `OutputWriterFactory` closure; only (path, rowCount)
-  *     commit messages reach the driver.
-  *  3. `commit` stages typed per-file stats over the written files
-  *     and publishes ONE log record: `added` = the new files,
-  *     `removed` = the captured scan set, `readVersion` = the
-  *     captured snapshot — so the standard conflict matrix rejects a
-  *     lost update (a concurrent rewrite/DV of any victim aborts
-  *     this commit), and MERGE additionally sets
-  *     `failOnConcurrentAppend` (read-set protection: a concurrent
-  *     append may hold keys this merge decided to insert).
-  *
-  * Deletion vectors compose for free: the scan's readers already
-  * drop DV'd rows, so a rewrite COMPACTS prior deletes into the new
-  * files, and vectors on removed files die with them.
-  *
-  * 100 TB shape: rewrite scope = post-prune, post-RUNTIME-filter
-  * file set (files that actually hold matches — [[GraftScan.filter]]),
-  * writes are executor-side and stats-collected in one distributed
-  * pass; the driver sees file names and bitmap-scale metadata only.
-  *
-  * Since r18 this group-based single-pass rewrite is the
-  * `spark.graft.dml.mode=cow-group` variant: the DEFAULT `cow` mode
-  * runs [[GraftDeltaOperation]] with a synchronous finalize (exact
-  * per-row kill bitmaps for the change feed + survivor rewrite in
-  * the same commit), and `mor` writes deletion vectors only. See
-  * [[GraftRowLevelOperation.builder]] for the trade-off table.
+  *  - `cow` (default): the delta write computes exact per-row kill
+  *    bitmaps + change files, then a synchronous finalize step
+  *    rewrites the touched files' SURVIVORS into the same commit —
+  *    the table state ends fully copy-on-write (no residual DVs),
+  *    while the bitmaps ride the commit as metadata so `t.feed`
+  *    serves EXACT `update_preimage`/`update_postimage`/`delete`
+  *    rows for COW DML (O(changed rows), never whole post-image
+  *    files). Costs one extra read of the touched files.
+  *  - `mor`: deletion vectors + insert files, no rewrite — write
+  *    amplification O(changed rows); reads pay the DV filter until
+  *    `optimizeCompactDeletes`.
   */
-private[sources] class GraftRowLevelOperation(root: String,
-                                              tableSchema: StructType,
-                                              cmd: RowLevelOperation.Command)
-  extends RowLevelOperation {
-
-  /** (files the scan planned, snapshot version it resolved) — set on
-    * the driver during scan planning, read at write commit.
-    */
-  @volatile private var scanned: Option[(Seq[String], Long)] = None
-
-  override def command(): RowLevelOperation.Command = cmd
-
-  override def description(): String = s"GraftRowLevel($cmd, root=$root)"
-
-  /** Require the `_file` metadata column. Group-based rewrites don't
-    * strictly need it (the replaced file set is captured at scan
-    * planning) — but Spark's ReplaceData exec only applies its
-    * data-row projection through the metadata-carrying task: with no
-    * metadata attribute the raw query rows (operation column
-    * included) would reach the writer. Requiring `_file` keeps us on
-    * the same projection path every production connector exercises,
-    * at the cost of one repeated string per row in the rewrite scan.
-    */
-  override def requiredMetadataAttributes()
-    : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    Array(org.apache.spark.sql.connector.expressions.Expressions.column(
-      GraftTable.FileMetaCol))
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftScanBuilder(SparkSession.active, root, Long.MaxValue, tableSchema,
-      options, onPlan = Some((fs, v) => scanned = Some((fs, v))))
-
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new WriteBuilder {
-      override def build(): Write = new Write {
-        override def description(): String = s"GraftRowLevelWrite($cmd)"
-        override def toBatch: BatchWrite =
-          new GraftBatchWrite(root, info.schema(),
-            action = cmd.toString.toLowerCase(java.util.Locale.ROOT),
-            () => scanned,
-            failOnConcurrentAppend = cmd == RowLevelOperation.Command.MERGE)
-      }
-    }
-}
-
-private object GraftRowLevelOperation {
-  /** DML write-path selection, per session
-    * (`SET spark.graft.dml.mode = cow | mor | cow-group`):
-    *
-    *  - `cow` (default): the delta write computes exact per-row kill
-    *    bitmaps + change files, then a synchronous finalize step
-    *    rewrites the touched files' SURVIVORS into the same commit —
-    *    the table state ends fully copy-on-write (no residual DVs),
-    *    while the bitmaps ride the commit as metadata so `t.feed`
-    *    serves EXACT `update_preimage`/`update_postimage`/`delete`
-    *    rows for COW DML (O(changed rows), never whole post-image
-    *    files). Costs one extra read of the touched files.
-    *  - `mor`: deletion vectors + insert files, no rewrite — write
-    *    amplification O(changed rows); reads pay the DV filter until
-    *    `optimizeCompactDeletes`.
-    *  - `cow-group`: the single-pass group-based rewrite (Spark's
-    *    ReplaceData framework) — reads touched files once and writes
-    *    their full replacement; for near-full-file UPDATEs this is
-    *    the cheapest write path, but the feed can only report its
-    *    post-image files wholesale (conservative CDC).
-    */
+private object GraftRowLevel {
   def builder(root: String, tableSchema: StructType,
               info: RowLevelOperationInfo): RowLevelOperationBuilder =
     new RowLevelOperationBuilder {
       override def build(): RowLevelOperation = {
         val mode = SparkSession.active.conf.get("spark.graft.dml.mode", "cow")
-        require(mode == "cow" || mode == "mor" || mode == "cow-group",
-          s"spark.graft.dml.mode must be cow, mor or cow-group, got $mode")
-        if (mode == "cow-group")
-          new GraftRowLevelOperation(root, tableSchema, info.command())
-        else new GraftDeltaOperation(root, tableSchema, info.command(),
+        require(mode == "cow" || mode == "mor",
+          s"spark.graft.dml.mode must be cow or mor, got $mode")
+        new GraftDeltaOperation(root, tableSchema, info.command(),
           finalizeCow = mode == "cow")
       }
     }
@@ -149,11 +56,15 @@ private case class GraftDeltaMessage(files: Seq[(String, Long)],
                                      deletes: Map[String, Array[Long]])
   extends WriterCommitMessage
 
-/** MERGE-ON-READ row-level operations ([[SupportsDelta]]): DELETE /
-  * UPDATE / MERGE write deletion-vector bits and NEW rows instead of
-  * rewriting the touched files — the Iceberg position-delete /
+/** SQL `UPDATE` / `MERGE INTO` / rewrite-path `DELETE` as delta
+  * row-level operations ([[SupportsDelta]]): the command writes
+  * deletion-vector bits and NEW rows — the Iceberg position-delete /
   * Delta DV recipe through Spark's delta-write framework:
   *
+  *  - the candidate rows come from a [[GraftScan]], so the command's
+  *    ON/WHERE condition prunes FILES against the log's typed stats
+  *    and blooms first, and the scan captures the snapshot version
+  *    it resolved (the commit's `readVersion`);
   *  - the row ID is `(_file, _pos)` — the coordinates the scan's
   *    readers already materialize and the DV format already
   *    addresses;
@@ -171,9 +82,9 @@ private case class GraftDeltaMessage(files: Seq[(String, Long)],
   * 1M-file table writes KB of bitmap per touched file instead of
   * re-materializing each. Reads pay the DV filter until
   * `optimizeCompactDeletes` folds dense vectors back in — the
-  * standard MOR maintenance contract. Mode selection is per session:
-  * `SET spark.graft.dml.mode=mor` (default `cow`,
-  * [[GraftRowLevelOperation]]).
+  * standard MOR maintenance contract. With `finalizeCow` (the default
+  * `cow` mode, [[GraftRowLevel.builder]]) the same commit also
+  * rewrites the touched files' survivors and removes the files.
   */
 private[sources] class GraftDeltaOperation(root: String,
                                            tableSchema: StructType,
@@ -242,9 +153,10 @@ private[sources] class GraftDeltaOperation(root: String,
     }
 }
 
-/** The delta batch write: insert files staged exactly like
-  * [[GraftBatchWrite]], deletion bitmaps assembled from the sparse
-  * per-task words, one commit carrying both.
+/** The delta batch write: executors write insert files into
+  * `data/<txnId>/` via Spark's own serialized `OutputWriterFactory`,
+  * deletion bitmaps are assembled from the sparse per-task words, and
+  * one commit carries both.
   */
 private class GraftDeltaBatchWrite(root: String, logicalSchema: StructType,
                                    action: String,
@@ -396,109 +308,6 @@ private class GraftDeltaWriterFactory(stagingDir: String, schema: StructType,
         ()
       }
 
-      override def close(): Unit = ()
-    }
-  }
-}
-
-/** A true DataSource V2 batch write into a [[TxnLog]] transaction:
-  * executors write parquet into `data/<txnId>/` via Spark's own
-  * serialized `OutputWriterFactory`, the driver collects (path,
-  * rowCount) messages, stats the staged files in one distributed
-  * pass, and publishes a single commit. Speculative / retried tasks
-  * are safe: the commit coordinator admits one winner per partition,
-  * losers' files stay unreferenced in the staging dir (reclaimed by
-  * [[TxnLog.vacuumStaging]]'s orphan sweep once nothing references
-  * the dir, ignored by stats alignment otherwise).
-  */
-private class GraftBatchWrite(root: String, logicalSchema: StructType,
-                              action: String,
-                              scanned: () => Option[(Seq[String], Long)],
-                              failOnConcurrentAppend: Boolean)
-  extends BatchWrite {
-
-  private def spark = SparkSession.active
-  private val txnId =
-    s"sql-$action-a${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}"
-  // staged files carry PHYSICAL names (all generations of a renamed
-  // table store the same column name); rows need no change — only
-  // the writer schema's field names differ
-  private val physSchema = {
-    val renames = TxnLog.columnMapping(root)
-    StructType(logicalSchema.fields.map(f =>
-      f.copy(name = renames.getOrElse(f.name, f.name))))
-  }
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    val dir = Paths.get(root, "data", txnId)
-    Files.createDirectories(dir)
-    val job = Job.getInstance(spark.sessionState.newHadoopConf())
-    val owf = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, physSchema)
-    new GraftDataWriterFactory(dir.toString, physSchema,
-      new SerializableConfiguration(job.getConfiguration), owf)
-  }
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val files = messages.collect {
-      case GraftFileMessage(p, n) if n > 0 => p
-    }.toSeq.sorted
-    val (removed, readV) =
-      scanned().getOrElse((Nil, TxnLog.currentVersion(root)))
-    if (files.isEmpty && removed.isEmpty) return // nothing matched, nothing inserted
-    // X-A42's contract covers DML too: UPDATE/MERGE post-images must
-    // honor CHECK + NOT NULL before anything publishes (a DELETE's
-    // staged rows are carried-over survivors — already proven)
-    if (action != "delete") TxnLog.checkStagedConstraints(spark, root, files)
-    val statCols = GraftTable.statPaths(physSchema)
-    // bucket-partitioned tables: post-image files re-record their
-    // derived bucket stats so rewrites never lose bucket pruning
-    val buckets = TxnLog.partitionFields(root).collect {
-      case TxnLog.BucketField(n, c) if physSchema.fieldNames.contains(c) => (n, c)
-    }
-    val multi =
-      if (files.isEmpty || (statCols.isEmpty && buckets.isEmpty)) Nil
-      else TxnLog.statsForStaged(spark, root, txnId, statCols, files, buckets)
-    TxnLog.commit(root, action, added = files, removed = removed,
-      readVersion = readV, txnId = txnId, multiStats = multi,
-      schemaId = TxnLog.schemaFingerprint(physSchema),
-      schemaJson = GraftTable.declareJson(root, physSchema),
-      failOnConcurrentAppend = failOnConcurrentAppend)
-    ()
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit =
-    messages.foreach {
-      case GraftFileMessage(p, _) => Files.deleteIfExists(Paths.get(p)); ()
-      case _                      => ()
-    }
-}
-
-private class GraftDataWriterFactory(stagingDir: String, schema: StructType,
-                                     conf: SerializableConfiguration,
-                                     owf: OutputWriterFactory)
-  extends DataWriterFactory {
-
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] = {
-    // per-(partition, task) names: a retried or speculative attempt
-    // can never clobber another attempt's file
-    val path = s"$stagingDir/part-$partitionId-$taskId.parquet"
-    val attempt = new TaskAttemptID(
-      new TaskID(new JobID("graft", 0), TaskType.MAP, partitionId), taskId.toInt)
-    val ctx = new TaskAttemptContextImpl(conf.value, attempt)
-    val writer = owf.newInstance(path, schema, ctx)
-    new DataWriter[InternalRow] {
-      private var n = 0L
-      override def write(row: InternalRow): Unit = { writer.write(row); n += 1 }
-      override def commit(): WriterCommitMessage = {
-        writer.close()
-        if (n == 0L) Files.deleteIfExists(Paths.get(path)) // no empty-file litter
-        GraftFileMessage(path, n)
-      }
-      override def abort(): Unit = {
-        writer.close()
-        Files.deleteIfExists(Paths.get(path))
-        ()
-      }
       override def close(): Unit = ()
     }
   }

@@ -240,7 +240,7 @@ private class GraftStreamingUpsertWrite(root: String,
   }
 }
 
-/** The streaming sibling of `GraftDataWriterFactory`: one parquet
+/** The streaming parquet writer factory: one parquet
   * file per (epoch, partition, task) under the epoch's own staging
   * directory, created executor-side (the factory is built once per
   * run and reused across epochs).

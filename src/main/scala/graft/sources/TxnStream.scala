@@ -204,8 +204,8 @@ object TxnStream {
     *
     * Per-version work: O(changed rows) through `indexOf` + a
     * file-pruned keyed retraction on the index — never proportional
-    * to the corpus or the index. A COW rewrite commit whose kills
-    * are not bitmap-described (legacy `cow-group`, overwrite)
+    * to the corpus or the index. A rewrite commit whose kills are not
+    * bitmap-described (INSERT OVERWRITE, [[TxnLog.mergeInto]])
     * retracts by the removed-files diff, like [[maintainMirror]].
     *
     * @param indexOf maps a frame of source rows to their index rows;
@@ -233,8 +233,8 @@ object TxnStream {
           val addRows = delta
             .filter(col(ChangeTypeCol).isin("insert", "update_postimage"))
             .drop(CommitVersionCol, ChangeTypeCol)
-          // non-bitmap rewrites (legacy cow-group, overwrite): the
-          // killed keys are the removed files' keys — retract them
+          // non-bitmap rewrites (INSERT OVERWRITE, TxnLog.mergeInto):
+          // the killed keys are the removed files' keys — retract them
           // all; survivors re-add through addRows in the same txn
           val cs = TxnLog.commitsInRange(sourceRoot, v - 1, v)
           val rewrites = cs.filter(c => c.removed.nonEmpty &&
@@ -315,19 +315,10 @@ object TxnStream {
     */
   def maintainMirror(s: SparkSession, sourceRoot: String, targetRoot: String,
                      consumerId: String, keyCol: String,
-                     upTo: Long = Long.MaxValue,
-                     minApplied: Long = 0L): Seq[Long] = {
+                     upTo: Long = Long.MaxValue): Seq[Long] = {
     import org.apache.spark.sql.functions.col
     val head = math.min(TxnLog.currentVersion(sourceRoot), upTo)
-    // `minApplied` floors the resume point for consumers whose offset
-    // markers live under a LEGACY id (`refresh_mv` pre-r17 used the
-    // typed identifier, not the canonical root): the caller reads the
-    // legacy consumer's applied version and passes it here, so an
-    // upgraded MV resumes instead of replaying the full source
-    // history (which fails outright once pre-horizon source versions
-    // have been vacuumed). Markers written from here on use
-    // `consumerId`; the floor is a one-time migration bridge.
-    val from = math.max(appliedVersion(targetRoot, consumerId), minApplied)
+    val from = appliedVersion(targetRoot, consumerId)
     ((from + 1) to head).flatMap { v =>
       val txnId = s"$consumerId-v$v"
       TxnLog.withTxnLock(txnId) {

@@ -120,6 +120,13 @@ class CowFeedSpec extends SparkTestBase {
     // and the final table states agree too
     assert(spark.sql("SELECT sum(v), count(*) FROM gcf.db.pc").head
       === spark.sql("SELECT sum(v), count(*) FROM gcf.db.pm").head)
+    // cow and mor are the only modes: any other value is rejected
+    val e = intercept[Exception] {
+      withSQLConf("spark.graft.dml.mode" -> "cow-group") {
+        spark.sql("UPDATE gcf.db.pc SET v = 0 WHERE k = 1")
+      }
+    }
+    assert(e.getMessage.contains("must be cow or mor"), e.getMessage)
   }
 
   test("mirror convergence: per-version work is O(changed rows) across COW DML and compaction") {
@@ -179,19 +186,5 @@ class CowFeedSpec extends SparkTestBase {
     assert(changed.select("k", "v").collect().map(r =>
       (r.getLong(0), r.getLong(1))).toSeq === Seq((7L, -1L)))
     assert(full > 1L, "the default full re-add view keeps its semantics")
-  }
-
-  test("cow-group remains available as the single-pass conservative path") {
-    warehouse
-    spark.sql("CREATE TABLE gcf.db.cg (k BIGINT, v BIGINT)")
-    spark.sql("INSERT INTO gcf.db.cg SELECT id, id FROM range(0, 50)")
-    withSQLConf("spark.graft.dml.mode" -> "cow-group") {
-      spark.sql("UPDATE gcf.db.cg SET v = 0 WHERE k < 5")
-    }
-    // semantics hold; the commit is a whole-file rewrite (no bitmaps)
-    assert(spark.sql("SELECT sum(v) FROM gcf.db.cg").head.getLong(0)
-      === (5L until 50L).sum)
-    val c = TxnLog.commits(root("cg")).find(_.version == 3L).get
-    assert(c.dvFiles.isEmpty && c.radds.isEmpty && c.removed.nonEmpty)
   }
 }
