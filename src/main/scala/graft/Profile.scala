@@ -2,7 +2,9 @@ package graft
 
 import scala.collection.mutable
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import java.util.concurrent.{Semaphore, TimeUnit}
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
 /** Stage-level profiler — the "where does the time go" companion to
@@ -41,11 +43,23 @@ object Profile {
     // the buffer itself, and REMOVE the listener at the end of each
     // runOne so profiling a comma-separated list doesn't accumulate
     // one listener per query.
+    // The listener bus delivers events in order, so once it has seen
+    // the end of a one-job marker run after the query, it has seen every
+    // stage of the query too; marker jobs are left out of the report.
     val stages = mutable.ArrayBuffer.empty[St]
     val stageToJob = mutable.Map.empty[Int, Int]
+    val markerJobs = mutable.Set.empty[Int]
+    val markersEnded = new Semaphore(0)
+    val ctx = spark.sparkContext
+    val markerProp = "graft.profile.marker"
     val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        stages.synchronized { js.stageIds.foreach(sid => stageToJob(sid) = js.jobId) }
+      override def onJobStart(js: SparkListenerJobStart): Unit = stages.synchronized {
+        js.stageIds.foreach(sid => stageToJob(sid) = js.jobId)
+        if (js.properties != null && js.properties.getProperty(markerProp) != null)
+          markerJobs += js.jobId
+      }
+      override def onJobEnd(je: SparkListenerJobEnd): Unit =
+        if (stages.synchronized(markerJobs(je.jobId))) markersEnded.release()
       override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
         val si = sc.stageInfo
         val m = si.taskMetrics
@@ -60,15 +74,19 @@ object Profile {
         }
       }
     }
-    spark.sparkContext.addSparkListener(listener)
+    ctx.addSparkListener(listener)
     try {
       for (rep <- 1 to reps) {
         stages.synchronized { stages.clear(); stageToJob.clear() }
         val t0 = System.nanoTime()
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         val wall = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(400) // let the listener bus drain (private API in 4.x)
-        val snap = stages.synchronized { stages.toSeq }
+        markersEnded.drainPermits()
+        ctx.setLocalProperty(markerProp, "1")
+        try ctx.parallelize(Seq(0), 1).count() finally ctx.setLocalProperty(markerProp, null)
+        if (!markersEnded.tryAcquire(60, TimeUnit.SECONDS))
+          println("[listener bus did not drain in 60 s; stages below may be incomplete]")
+        val snap = stages.synchronized { stages.filterNot(s => markerJobs(s.jobId)).toSeq }
         println(f"%n===== $name rep $rep: wall $wall%.2f s, ${snap.size} stages =====")
         println(f"${"job"}%4s ${"stage"}%5s ${"wall_ms"}%8s ${"task_ms"}%9s ${"tasks"}%5s ${"in_MB"}%8s ${"in_rows"}%10s ${"shR_MB"}%7s ${"shW_MB"}%7s ${"spill_MB"}%8s  name")
         snap.sortBy(s => (s.jobId, s.stageId)).foreach { s =>
@@ -78,6 +96,6 @@ object Profile {
         println(f"[stage wall sum ${sumWall / 1000.0}%.2f s vs query wall $wall%.2f s — gap = driver/plan/collect time]")
         spark.catalog.clearCache()
       }
-    } finally spark.sparkContext.removeSparkListener(listener)
+    } finally ctx.removeSparkListener(listener)
   }
 }

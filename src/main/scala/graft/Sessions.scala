@@ -49,8 +49,8 @@ object Sessions {
       // 100-entry cache is smaller than ONE pass over the 250-query
       // surface (~15 codegen units per query), so by the time a query
       // comes around again every one of its generated classes has been
-      // evicted and janino recompiles the identical source — measured
-      // at 030% of per-query wall mid-suite vs the same query isolated
+      // evicted and janino recompiles the identical source — every
+      // query measured 30–50% slower mid-suite than isolated
       // (gr_pagerank 5.7 s mid-suite vs 2.9 s isolated, txt_rake 2.1
       // vs 0.9; r21 baseline). 8192 entries hold the whole surface;
       // an entry is a GeneratedClass reference (the classes live in

@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated testdata tables (TESTDATA.md).
   *
@@ -17,8 +19,47 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** Session confs that change what parquet schema inference returns. */
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema")
+
+  /** Inferred schemas keyed by (qualified path, (name, length, mtime) of
+    * every file under it, inference confs): a replaced or rewritten
+    * table, or a changed conf, is a new key. Only the StructType is kept,
+    * so every load is a fresh relation and self-joins get distinct
+    * attribute ids.
+    */
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[(String, Seq[(String, Long, Long)], Seq[Option[String]]), StructType]()
+
+  /** A fresh DataFrame over `dir/name.parquet`. The first load of a file
+    * version infers its schema (one Spark job reading the footers); later
+    * loads of the same version pass that schema in and run no job.
+    */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val loc = s"$dir/$name.parquet"
+    val path = new Path(loc)
+    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
+    // a missing table skips the cache and fails with Spark's own error
+    if (!fs.exists(path)) return spark.read.parquet(loc)
+    val it = fs.listFiles(path, true)
+    val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toList
+    val key = (fs.makeQualified(path).toString, files, inferenceConfs.map(spark.conf.getOption))
+    Option(schemas.get(key)) match {
+      case Some(schema) => spark.read.schema(schema).parquet(loc)
+      case None =>
+        // inferred outside any lock: a racing load infers too, and its
+        // putIfAbsent is a no-op
+        val df = spark.read.parquet(loc)
+        schemas.putIfAbsent(key, df.schema)
+        df
+    }
+  }
 
   def region(spark: SparkSession, dir: String): DataFrame    = load(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame    = load(spark, dir, "nation")

@@ -6,9 +6,10 @@
 #  1. `sbt runMain graft.Verify <sfDir> <out>` writes every query's result,
 #     oracle_sql.json and plans.json;
 #  2. tools/check.py compares each result with DuckDB (rows, schema, dtype);
-#  3. tools/plancheck.py diffs plans.json against the committed PLANS.json.
+#  3. tools/plancheck.py diffs plans.json against the committed PLANS.json;
+#  4. the benchmark's own unit tests (perfbench/tests, no JVM, seconds).
 #
-# All three steps always run, so one pass reports every failure; the exit
+# All four steps always run, so one pass reports every failure; the exit
 # status is non-zero if any of them failed. Verify's output and every JVM,
 # Spark and DuckDB temp file go to one fresh temp dir, removed on exit.
 set -u
@@ -44,6 +45,8 @@ echo "== tools/check.py"
 python3 tools/check.py "$sf" "$out" || status=1
 echo "== tools/plancheck.py"
 python3 tools/plancheck.py "$out" PLANS.json || status=1
+echo "== perfbench unit tests"
+python3 -m unittest discover -s perfbench/tests || status=1
 
 if [ "$status" -eq 0 ]; then echo "gate: PASS"; else echo "gate: FAIL"; fi
 exit "$status"
